@@ -60,7 +60,11 @@ def _drain_partitions(spark: SparkSession, source_bytes: int | None) -> int:
     stateful aggregation computes, only where keys live — output
     equality across counts is asserted in tests/test_streaming.py.
     """
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        sess = int(spark.conf.get("spark.sql.shuffle.partitions", None))
+    except (TypeError, ValueError):
+        # unset or not a number: size from the cluster instead
+        sess = spark.sparkContext.defaultParallelism
     if not source_bytes:
         return sess
     return int(max(1, min(sess, (source_bytes + (32 << 20) - 1) >> 25)))

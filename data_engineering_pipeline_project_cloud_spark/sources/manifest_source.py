@@ -2000,13 +2000,31 @@ def convert_to_manifest(spark, path: str,
 
 def _key_pruning_info(updates, key_cols: list[str],
                       max_driver_keys: int = 100_000):
-    """One metadata pass over the updates: per-key-column [min,max]
-    bounds plus a driver-bounded sorted distinct sample of the FIRST
-    key column (``None`` when the key set exceeds the cap).  Shared by
-    MERGE/DELETE file pruning and by the serializable-conflict check —
-    both sides of the protocol must reason from the same key summary."""
+    """The key summary of a keyed rewrite, shared by file pruning, the
+    multi-match guard and the serializable-conflict check: per-key-
+    column [min,max] bounds, the sorted distinct FIRST-key values and
+    the repeated key tuples (``None`` when they were not collected).
+    One bounded action collects the distinct key tuples with their
+    counts; past ``max_driver_keys`` tuples, one aggregate gives the
+    bounds, a capped sample the first-key values, and the repeats
+    stay unknown."""
     from pyspark.sql import functions as F
 
+    rows = (updates.groupBy(*key_cols).count()
+            .limit(max_driver_keys + 1).collect())
+    if len(rows) <= max_driver_keys:
+        bounds = {}
+        for i, c in enumerate(key_cols):
+            vals = [r[i] for r in rows if r[i] is not None]
+            # NaN has no place in a Python ordering: no bound, no prune
+            ok = vals and not any(v != v for v in vals)
+            bounds[c] = (min(vals), max(vals)) if ok else (None, None)
+        firsts = {r[0] for r in rows if r[0] is not None}
+        keys_sorted = (None if any(v != v for v in firsts)
+                       else sorted(firsts))
+        dups = [tuple(r[:-1]) for r in rows
+                if r[-1] > 1 and None not in tuple(r[:-1])]
+        return bounds, keys_sorted, dups
     aggs = []
     for c in key_cols:
         aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
@@ -2016,25 +2034,7 @@ def _key_pruning_info(updates, key_cols: list[str],
               .limit(max_driver_keys + 1).collect())
     keys_sorted = (sorted(r[0] for r in sample if r[0] is not None)
                    if len(sample) <= max_driver_keys else None)
-    return bounds, keys_sorted
-
-
-def _key_affected_files(files: list[dict], updates, key_cols: list[str],
-                        max_driver_keys: int = 100_000) -> list[dict]:
-    """Live files that MIGHT contain a key present in ``updates`` —
-    the file-skipping half of copy-on-write MERGE.  Pruning is stats-
-    based (per key column, a file whose [min,max] is disjoint from the
-    updates' range cannot match) with an exact-key refinement on the
-    first key column whenever the distinct key set is driver-bounded
-    (sorted list + bisect per file — the same O(files·log keys)
-    metadata pass a table format's MERGE planner runs), plus a bloom
-    membership probe when the file carries one and the key set is
-    small — the case that matters on HASH layouts, where every file's
-    range spans the table and only blooms can skip.  Missing
-    stats/bloom → the file is affected (never prune on doubt)."""
-    bounds, keys_sorted = _key_pruning_info(updates, key_cols,
-                                            max_driver_keys)
-    return _files_possibly_containing(files, key_cols, bounds, keys_sorted)
+    return bounds, keys_sorted, None
 
 
 def _files_possibly_containing(files: list[dict], key_cols: list[str],
@@ -2702,205 +2702,54 @@ def merge_into_manifest(updates, path: str, key_cols: list[str],
                         delete_keys=None,
                         not_matched_by_source: str | None = None,
                         schema_evolution: bool = False) -> dict:
-    """Copy-on-write MERGE (upsert by key) into a manifest table: rows
-    of ``updates`` REPLACE same-key rows, new keys INSERT.  ``updates``
-    must be key-grain (one row per key — run latest-state dedup
-    upstream) with the table's columns.
+    """Upsert by key — ``merge_apply`` with ``UPDATE SET *`` /
+    ``INSERT *``.  ``updates`` must be key-grain (a repeated key that
+    matches raises the multi-match error) with the table's columns.
 
-    Only the files that might hold an updated key are rewritten
-    (``_key_affected_files`` stats pruning); untouched files keep
-    their manifest entries.  The rewrite = affected files anti-joined
-    on the keys, unioned with the updates, appended in the SAME atomic
-    commit that tombstones the replaced entries (``replacePaths``), so
-    readers see pre-merge or post-merge, never a mix — and a
-    concurrent commit that already rewrote one of those files fails
-    this commit with a concurrent-modification error instead of
-    resurrecting its rows.  Tombstoned files stay on disk and
-    addressable: time travel to pre-merge versions keeps working.
-
-    Serializable vs concurrent appends: the commit also carries this
-    merge's KEY SUMMARY (``conflictKeys``) and, at CAS time, checks
-    every file appended after the merge's read snapshot against it
-    (stats range → exact-key bisect → bloom probe) — a racing plain
-    append that inserted one of the merged keys fails THIS commit with
-    a serializable-conflict error instead of silently leaving two rows
-    for the key.  Plain appends into a keyed view can opt into the
-    same protection with the writer's ``appendKeys`` option (round
-    6): each opted-in append derives a key summary from its own
-    files' stats and fails at CAS time on a possible intersection
-    with files appended since its planning snapshot.  Without the
-    option the Delta-WriteSerializable residual remains (two
-    concurrent bare appends of the same key are not cross-checked) —
-    keyed views should insert through MERGE or opt in.
-
-    100 TB shape: work is O(affected files + updates), never a scan of
-    the table; the anti-join broadcasts the (CDC-batch-sized) key set.
-
-    ``txn=(app_id, version)`` makes the merge idempotent per version
-    (the streaming foreachBatch contract): an already-recorded version
-    returns without planning any work, and the commit protocol
-    re-checks under the CAS claim.
-
-    ``delete_keys`` (a key-columns DataFrame) adds MERGE's delete
-    clause IN THE SAME ATOMIC COMMIT: rows with those keys are dropped
-    from the rewrite alongside the upserts, so a CDC batch carrying
-    inserts, updates AND deletes lands as ONE version — readers never
-    observe the merged-but-not-yet-deleted intermediate state a
-    two-commit apply would expose.
-
-    ``not_matched_by_source`` (round 7) completes the Delta tri-clause
-    surface — WHEN NOT MATCHED BY SOURCE THEN DELETE: a SQL boolean
-    expression over the TABLE's columns (``"true"`` for
-    unconditional); target rows whose key is absent from ``updates``
-    (and from ``delete_keys``) AND that satisfy the expression are
-    deleted in the same atomic commit.  This is the snapshot-sync
-    clause (drop rows that vanished from the source extract, retire
-    stale partitions).  Scale note: unlike the key-pruned clauses,
-    this one must EXAMINE every live file — any row anywhere might be
-    unmatched — so the rewrite covers the whole table; bound it with
-    a selective expression and expect the cost of a full rewrite,
-    exactly as Delta documents for the same clause.
-
-    ``schema_evolution=True`` (round 8 — Delta's
-    ``withSchemaEvolution``): columns in ``updates`` that the table
-    lacks WIDEN the table schema in the same commit (add-column only,
-    the evolution contract appends already follow).  Rewritten rows
-    from affected files NULL-fill the new columns; untouched files
-    null-fill at read time.
-    """
-    spark = updates.sparkSession
-    register(spark)
-    m = load_manifest(path)
-    if txn is not None:
-        done = m.get("txn", {}).get(txn[0])
-        if done is not None and int(done) >= txn[1]:
-            return m  # replayed batch: the merge already landed
-    st = _table_schema(m)
+    ``delete_keys`` (a key-columns DataFrame) adds a DELETE clause in
+    the same atomic commit, so a CDC batch of inserts, updates AND
+    deletes lands as ONE version; a key in both frames is upserted.
+    ``not_matched_by_source`` (a SQL condition over the TABLE's
+    columns, ``"true"`` for all) deletes target rows whose key is in
+    neither frame — a by-source clause, so every live file is
+    examined.  ``txn`` and ``schema_evolution`` pass through."""
     from pyspark.sql import functions as F
 
-    if not schema_evolution:
-        # conform the updates to the TABLE schema (order + types): a
-        # MERGE must never implicitly evolve the table
-        updates = updates.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name)
-              for f in st.fields])
-    else:
-        # WITH SCHEMA EVOLUTION (Delta's withSchemaEvolution, round
-        # 8): NEW columns in the updates widen the table (add-column
-        # only — the commit's _merged_schema_json enforces the same
-        # evolution contract appends follow); existing columns still
-        # conform to the table's types.  Rewritten rows from affected
-        # files NULL-fill the new columns, untouched files null-fill
-        # at read time — exactly add-column semantics.
-        upd_fields = {f.name: f for f in updates.schema.fields}
-        new_fields = [f for f in updates.schema.fields
-                      if f.name not in {g.name for g in st.fields}]
-        updates = updates.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name)
-              for f in st.fields if f.name in upd_fields],
-            *[F.col(f.name) for f in new_fields])
-        missing = [f.name for f in st.fields
-                   if f.name not in upd_fields]
-        if missing:
-            raise ValueError(
-                "schema-evolution MERGE updates must still carry "
-                f"every table column; missing: {missing}")
-    types = {f.name: f.dataType for f in st.fields}
-    touched_keys = updates.select(*key_cols)
+    matched = [{"cond": None, "action": "update", "set": None}]
+    not_matched = [{"cond": None, "values": None}]
+    source = updates
     if delete_keys is not None:
-        delete_keys = delete_keys.select(
+        # one source: the upserts plus the MARKED delete keys that are
+        # not also upserted
+        mark = "__merge_delete"
+        types = {f.name: f.dataType for f in updates.schema.fields}
+        doomed = (delete_keys.select(
             *[F.col(c).cast(types[c]).alias(c) for c in key_cols])
-        touched_keys = touched_keys.unionByName(delete_keys)
-    touched_keys = touched_keys.distinct()
-    bounds, keys_sorted = _key_pruning_info(touched_keys, key_cols)
-    if not_matched_by_source is None:
-        affected = _files_possibly_containing(m["files"], key_cols,
-                                              bounds, keys_sorted)
-    else:
-        # the BY SOURCE clause can delete a row in ANY file: key
-        # pruning does not apply — every live file is rewritten
-        affected = [f for f in m["files"] if not f.get("dead")]
-    conflict = _conflict_option(m.get("version", 0), key_cols[0],
-                                bounds, keys_sorted)
-    paths = [f["path"] for f in affected]
-    if paths:
-        # schema-evolution alignment + deletion-vector masking happen
-        # inside the read (raw bytes would resurrect DV-deleted rows);
-        # the anti-join drops upserted AND deleted keys in one pass —
-        # upserted keys re-enter from `updates`, deleted ones don't
-        base = _masked_spark_read(spark, st, affected)
-        kept = base.join(F.broadcast(touched_keys), key_cols,
-                         "left_anti")
-        if not_matched_by_source is not None:
-            # after the anti-join every surviving row's key is absent
-            # from the source (and from delete_keys, which are
-            # deleted regardless), i.e. ALL survivors are NOT MATCHED
-            # BY SOURCE — the clause reduces to one filter.  A NULL
-            # condition keeps the row (SQL: a non-TRUE WHEN does not
-            # fire), matching Delta's clause semantics.
-            kept = kept.filter(
-                ~F.coalesce(F.expr(not_matched_by_source),
-                            F.lit(False)))
-        out = kept.unionByName(updates, allowMissingColumns=True)
-    else:
-        out = updates
-    write_frame(
-        out.repartition(max(1, len(paths))), path, "append",
-        statCols=",".join(stat_cols),
-        replacePaths=json.dumps(paths),
-        dvState=json.dumps(
-            {f["path"]: f.get("dvGen", 0) for f in affected}),
-        conflictKeys=conflict,
-        txnAppId=txn[0] if txn else None,
-        txnVersion=str(txn[1]) if txn else None)
-    return load_manifest(path)
+            .distinct()
+            .join(updates.select(*key_cols), key_cols, "left_anti"))
+        source = (updates.withColumn(mark, F.lit(False))
+                  .unionByName(doomed.withColumn(mark, F.lit(True)),
+                               allowMissingColumns=True))
+        matched.insert(0, {"cond": mark, "action": "delete"})
+        not_matched[0]["cond"] = f"NOT {mark}"
+    nmbs = ([{"cond": not_matched_by_source, "action": "delete"}]
+            if not_matched_by_source is not None else None)
+    return merge_apply(source, path, key_cols, stat_cols,
+                       matched=matched, not_matched=not_matched,
+                       not_matched_by_source=nmbs, txn=txn,
+                       schema_evolution=schema_evolution)
 
 
 def delete_from_manifest(keys, path: str, key_cols: list[str],
                          stat_cols: list[str],
                          txn: tuple[str, int] | None = None) -> dict:
-    """Copy-on-write DELETE by key: rewrite only the files that might
-    hold a doomed key, dropping those rows (anti-join); same atomic
-    tombstone commit and conflict detection as ``merge_into_manifest``.
-    A delete that empties every affected file commits pure tombstones
-    (no new files).  ``txn=(app_id, version)`` makes the delete
-    idempotent per version (the streaming foreachBatch contract)."""
-    spark = keys.sparkSession
-    register(spark)
-    m = load_manifest(path)
-    if txn is not None:
-        done = m.get("txn", {}).get(txn[0])
-        if done is not None and int(done) >= txn[1]:
-            return m  # replayed batch: the delete already landed
-    st = _table_schema(m)
-    from pyspark.sql import functions as F
-
-    types = {f.name: f.dataType for f in st.fields}
-    keys = keys.select(*[F.col(c).cast(types[c]).alias(c)
-                         for c in key_cols])
-    bounds, keys_sorted = _key_pruning_info(keys, key_cols)
-    affected = _files_possibly_containing(m["files"], key_cols, bounds,
-                                          keys_sorted)
-    conflict = _conflict_option(m.get("version", 0), key_cols[0],
-                                bounds, keys_sorted)
-    paths = [f["path"] for f in affected]
-    if not paths:
-        return m  # nothing could match: the table is untouched
-    from pyspark.sql import functions as F
-
-    base = _masked_spark_read(spark, st, affected)
-    kept = base.join(F.broadcast(keys.select(*key_cols).distinct()),
-                     key_cols, "left_anti")
-    write_frame(
-        kept.repartition(max(1, len(paths))), path, "append",
-        statCols=",".join(stat_cols),
-        replacePaths=json.dumps(paths),
-        dvState=json.dumps(
-            {f["path"]: f.get("dvGen", 0) for f in affected}),
-        conflictKeys=conflict,
-        txnAppId=txn[0] if txn else None,
-        txnVersion=str(txn[1]) if txn else None)
-    return load_manifest(path)
+    """Copy-on-write DELETE by key — ``merge_apply`` with one
+    unconditional ``WHEN MATCHED THEN DELETE`` (repeated keys are
+    fine).  A delete that empties every affected file commits pure
+    tombstones (no new files)."""
+    return merge_apply(keys.select(*key_cols), path, key_cols, stat_cols,
+                       matched=[{"cond": None, "action": "delete"}],
+                       txn=txn)
 
 
 def merge_apply(source, path: str, key_cols: list[str],
@@ -2911,10 +2760,10 @@ def merge_apply(source, path: str, key_cols: list[str],
                 target_alias: str = "t", source_alias: str = "s",
                 txn: tuple[str, int] | None = None,
                 schema_evolution: bool = False) -> dict:
-    """Copy-on-write MERGE with the FULL Delta clause matrix (the
-    CDC-apply idiom ``merge_into_manifest``'s fixed upsert shape
-    cannot express): ordered, conditional WHEN clauses with
-    per-column assignments —
+    """Copy-on-write MERGE with the FULL Delta clause matrix — the one
+    planner of every keyed rewrite (``merge_into_manifest`` and
+    ``delete_from_manifest`` are clause shorthands over it): ordered,
+    conditional WHEN clauses with per-column assignments —
 
     * ``matched``: ``[{"cond": sql|None, "action": "update"|"delete",
       "set": {col: expr}|None}, ...]`` — evaluated IN ORDER per
@@ -2936,16 +2785,18 @@ def merge_apply(source, path: str, key_cols: list[str],
     Spark SQL over the ALIASED sides — ``target_alias``/
     ``source_alias`` name them (the MERGE statement's aliases), so
     ``"s.op = 'D'"`` and ``{"v": "t.v + s.delta"}`` resolve exactly
-    as they would in Delta SQL; unqualified names resolve when
-    unambiguous and raise Spark's analysis error when both sides
-    carry them.
+    as they would in Delta SQL; in ``matched`` clauses unqualified
+    names resolve when unambiguous and raise Spark's analysis error
+    when both sides carry them.
 
     Semantics guarded exactly as Delta guards them: if MULTIPLE
     source rows match one target row while any ``matched`` clause
-    exists, the merge raises (the result would be nondeterministic) —
-    checked with a cheap duplicate-key probe first, so the common
-    key-grain source pays one map-side aggregation, never a second
-    table scan.  GENERATED columns not explicitly assigned by the
+    exists, the merge raises (the result would be nondeterministic);
+    a sole unconditional ``matched`` DELETE is exempt, as in Delta.
+    The repeated source keys come from the planning pass's key
+    summary, so a key-grain source pays no extra action; only when
+    keys repeat does a semi-join probe the target.  GENERATED columns
+    not explicitly assigned by the
     firing clause are RECOMPUTED from the post-image (same contract
     as ``update_manifest``).
 
@@ -2962,15 +2813,20 @@ def merge_apply(source, path: str, key_cols: list[str],
     Spark can only sort-merge), inserts come from a separate
     anti-join of the source against the candidate files' KEY columns,
     and an insert-only merge rewrites nothing at all (pure append
-    commit).  O(affected files + source), zero driver
-    materialization; blooms and first-class partition values carry
-    through the rewrite.  Scoping rules (Delta's): insert
+    commit).  O(affected files + source); only the bounded key
+    summary is collected; blooms and first-class partition values
+    carry through the rewrite.  Scoping rules (Delta's): insert
     conditions/values resolve against the SOURCE only; by-source
-    conditions/assignments against the TARGET only; matched clauses
-    see both sides.
+    conditions/assignments against the TARGET only (evaluated before
+    the join, so a column both sides carry is not ambiguous there);
+    matched clauses see both sides.  Source columns named
+    ``__merge_*`` are control columns: schema evolution never adds
+    them to the table.
 
-    ``txn=(app_id, version)`` gives foreachBatch idempotency, same as
-    ``merge_into_manifest``."""
+    ``txn=(app_id, version)`` makes the merge idempotent per version
+    (the streaming foreachBatch contract): an already-recorded version
+    returns without planning any work, and the commit protocol
+    re-checks under the CAS claim."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -3007,7 +2863,8 @@ def merge_apply(source, path: str, key_cols: list[str],
         # Star clauses carry them from the source; rows no clause
         # touches NULL-fill, exactly add-column read semantics.
         new_fields = [f for f in source.schema.fields
-                      if f.name not in name_set]
+                      if f.name not in name_set
+                      and not f.name.startswith("__merge_")]
         names = names + [f.name for f in new_fields]
         name_set = set(names)
         for f in new_fields:
@@ -3069,10 +2926,10 @@ def merge_apply(source, path: str, key_cols: list[str],
                 explicit.setdefault(c, set()).add(lab)
 
     # ---- plan: candidate files (key-pruned unless BY SOURCE) -------
-    src_keys = source.select(
-        *[F.col(c).cast(types[c]).alias(c) for c in key_cols]
-    ).distinct()
-    bounds, keys_sorted = _key_pruning_info(src_keys, key_cols)
+    key_rows = source.select(
+        *[F.col(c).cast(types[c]).alias(c) for c in key_cols])
+    bounds, keys_sorted, dups = _key_pruning_info(key_rows, key_cols)
+    src_keys = key_rows.distinct()
     # only matched / by-source clauses REWRITE target files; an
     # insert-only merge appends and tombstones NOTHING (and is immune
     # to duplicate matched source keys by construction)
@@ -3091,35 +2948,40 @@ def merge_apply(source, path: str, key_cols: list[str],
         return m  # nothing could match and nothing inserts
 
     t_ind, s_ind = "__merge_t_row", "__merge_s_row"
-    if t_ind in name_set or s_ind in name_set \
+    if any(n.startswith("__merge_") for n in name_set) \
             or t_ind in source.columns or s_ind in source.columns:
-        raise ValueError(
-            f"column names {t_ind!r}/{s_ind!r} are reserved")
+        raise ValueError("column names starting with '__merge_' are "
+                         "reserved")
     if paths:
         base = _masked_spark_read(spark, st, affected)
     else:
         base = spark.createDataFrame([], st)
 
-    # ---- Delta's multi-match guard (cheap probe first) -------------
-    if matched and paths:
-        dups = (source.groupBy(*key_cols).count()
-                .filter(F.col("count") > 1).select(*key_cols))
-        if dups.limit(1).count():
-            clash = base.join(
-                F.broadcast(dups.select(
-                    *[F.col(c).cast(types[c]).alias(c)
-                      for c in key_cols])),
-                key_cols, "left_semi").limit(1).count()
-            if clash:
-                raise ValueError(
-                    "MERGE: multiple source rows match the same "
-                    "target row and a WHEN MATCHED clause exists — "
-                    "the result would be nondeterministic; dedupe "
-                    "the source to key grain first")
+    # ---- Delta's multi-match guard ---------------------------------
+    # a sole unconditional DELETE is exempt (Delta's rule): every
+    # match deletes the same row, so the join uses the distinct keys
+    delete_only = (len(matched) == 1 and matched[0].get("cond") is None
+                   and matched[0].get("action", "update") == "delete")
+    if matched and paths and not delete_only and dups != []:
+        if dups is None:
+            # past the key summary's cap: probe the source
+            dup_keys = (key_rows.groupBy(*key_cols).count()
+                        .filter(F.col("count") > 1).select(*key_cols))
+            if not dup_keys.limit(1).count():
+                dup_keys = None
+        else:
+            dup_keys = spark.createDataFrame(
+                dups, StructType([st[c] for c in key_cols]))
+        if dup_keys is not None and base.join(
+                F.broadcast(dup_keys), key_cols,
+                "left_semi").limit(1).count():
+            raise ValueError(
+                "MERGE: multiple source rows match the same "
+                "target row and a WHEN MATCHED clause exists — "
+                "the result would be nondeterministic; dedupe "
+                "the source to key grain first")
 
     act_col = "__merge_act"
-    if act_col in name_set:
-        raise ValueError(f"column name {act_col!r} is reserved")
 
     def _fire(cond: str | None):
         if cond is None:
@@ -3135,8 +2997,23 @@ def merge_apply(source, path: str, key_cols: list[str],
         # no MATCHED clause the join only needs matched-NESS, so the
         # key-grain src_keys frame joins instead of the raw source —
         # duplicate source keys can then never fan out kept rows.
-        tdf = base.withColumn(t_ind, F.lit(True)).alias(ta)
-        s_frame = source if matched else src_keys
+        # BY SOURCE conditions and assignments see the TARGET only, so
+        # they are evaluated before the join: a column both sides
+        # carry is not ambiguous there.
+        pre = {}  # (label, column or None for the condition) -> expr
+        for lab, kind, cond in act_order:
+            if kind == "by_source" and cond is not None:
+                pre[(lab, None)] = _fire(cond)
+        for lab, _, amap in upd_clauses:
+            if lab.startswith("b"):
+                for c, e in amap.items():
+                    pre[(lab, c)] = F.expr(e).cast(types[c])
+        pre_col = {k: f"{ta}.__merge_pre{i}" for i, k in enumerate(pre)}
+        tdf = base.alias(ta).select(
+            "*", F.lit(True).alias(t_ind),
+            *[v.alias(f"__merge_pre{i}")
+              for i, v in enumerate(pre.values())]).alias(ta)
+        s_frame = source if matched and not delete_only else src_keys
         sdf = s_frame.withColumn(s_ind, F.lit(True)).alias(sa)
         # join on keys CAST TO THE TABLE'S TYPES — the same cast the
         # file-pruning src_keys uses; raw-typed equality (e.g. string
@@ -3152,7 +3029,9 @@ def merge_apply(source, path: str, key_cols: list[str],
         for lab, kind, cond in act_order:
             if kind == "insert":
                 continue  # source-only rows never appear here
-            c = guards[kind] & _fire(cond)
+            fire = (F.col(pre_col[(lab, None)]) if (lab, None) in pre
+                    else _fire(cond))
+            c = guards[kind] & fire
             act = F.when(c, F.lit(lab)) if act is None else \
                 act.when(c, F.lit(lab))
         act = act.otherwise(F.lit("__keep")) if act is not None \
@@ -3163,7 +3042,8 @@ def merge_apply(source, path: str, key_cols: list[str],
             for lab, cond, amap in upd_clauses:
                 if f.name not in amap or lab.startswith("i"):
                     continue
-                v = F.expr(amap[f.name]).cast(f.dataType)
+                v = (F.col(pre_col[(lab, f.name)]) if lab.startswith("b")
+                     else F.expr(amap[f.name]).cast(f.dataType))
                 col = F.when(F.col(act_col) == lab, v) if col is None \
                     else col.when(F.col(act_col) == lab, v)
             orig = (F.col(f"{ta}.{f.name}") if f.name in t_names
@@ -3176,17 +3056,16 @@ def merge_apply(source, path: str, key_cols: list[str],
         # (the anti-join needs only the candidate files' keys — the
         # same stats-pruned slice, never the whole table).  Insert
         # conditions and values are SOURCE expressions (Delta's own
-        # scoping rule); a target reference fails analysis.
-        cand = affected if touch_target else \
-            _files_possibly_containing(m["files"], key_cols, bounds,
-                                       keys_sorted)
-        if cand:
-            tkeys = _masked_spark_read(spark, st, cand) \
-                .select(*key_cols)
+        # scoping rule); a target reference fails analysis.  When the
+        # update part already reads the candidate files, their keys
+        # come from that same read.
+        if touch_target:
+            tkeys = base.select(*key_cols)
         else:
-            tkeys = spark.createDataFrame(
-                [], StructType([f for f in st.fields
-                                if f.name in key_cols]))
+            cand = _files_possibly_containing(m["files"], key_cols,
+                                              bounds, keys_sorted)
+            tkeys = (_masked_spark_read(spark, st, cand) if cand
+                     else base).select(*key_cols)
         sdf_i = source.alias(sa)
         on_i = reduce(lambda a, b: a & b,
                       [sdf_i[k].cast(types[k]) == tkeys[k]
@@ -3880,7 +3759,7 @@ def delete_vectors_from_manifest(keys, path: str, key_cols: list[str],
     types = {f.name: f.dataType for f in st.fields}
     keys = keys.select(*[F.col(c).cast(types[c]).alias(c)
                          for c in key_cols]).distinct()
-    bounds, keys_sorted = _key_pruning_info(keys, key_cols)
+    bounds, keys_sorted, _ = _key_pruning_info(keys, key_cols)
     affected = _files_possibly_containing(m["files"], key_cols, bounds,
                                           keys_sorted)
     if not affected:

@@ -83,11 +83,9 @@ one-row operation summary, queries return their rows):
   columns fill from their declared DEFAULT else NULL), and ``WHEN
   NOT MATCHED BY SOURCE [AND c] THEN UPDATE ... | DELETE``.  Per
   row the FIRST clause of its kind whose condition is TRUE fires;
-  a condition-less clause must be last of its kind.  The plain
-  upsert/delete shapes dispatch to ``merge_into_manifest`` /
-  ``delete_from_manifest`` unchanged; everything else runs through
-  ``merge_apply`` (one atomic CDC-apply commit, multi-match guard
-  included).
+  a condition-less clause must be last of its kind.  Every shape
+  runs through ``merge_apply`` (one atomic CDC-apply commit,
+  multi-match guard included).
 * ``COPY INTO `t` FROM '<src>' FILEFORMAT = <fmt> [PATTERN = '<glob>']
   [FORMAT_OPTIONS ('k' = 'v', ...)] [COPY_OPTIONS ('force' = 'true')]``
   → ``copy_into``.
@@ -1243,12 +1241,7 @@ def _stmt_delete(spark: SparkSession, p: _P) -> DataFrame:
 
 
 def _stmt_merge(spark: SparkSession, p: _P) -> DataFrame:
-    from .sources.manifest_source import (
-        delete_from_manifest,
-        load_manifest,
-        merge_apply,
-        merge_into_manifest,
-    )
+    from .sources.manifest_source import load_manifest, merge_apply
 
     p.expect("MERGE")
     evolve = p.eat("WITH", "SCHEMA", "EVOLUTION")
@@ -1301,31 +1294,6 @@ def _stmt_merge(spark: SparkSession, p: _P) -> DataFrame:
         raise ValueError(
             f"MERGE target does not exist: {path!r}") from exc
     stat_cols = _live_stat_cols(m0) or list(key_cols)
-
-    # legacy fast paths: the exact shapes merge_into_manifest /
-    # delete_from_manifest already implement dispatch there unchanged
-    # (identical semantics, fewer moving parts); everything else is
-    # the general clause matrix -> merge_apply
-    def _is(cl, **kv):
-        return all(cl.get(k) == v for k, v in kv.items())
-
-    if (not evolve and len(matched) == 1 and not not_matched
-            and not nmbs
-            and _is(matched[0], cond=None, action="delete")):
-        m = delete_from_manifest(
-            src_df.select(*key_cols), path, key_cols, stat_cols)
-        return _summary(spark, "MERGE DELETE", path,
-                        version=m.get("version"))
-    if (len(matched) == 1 and len(not_matched) == 1 and len(nmbs) <= 1
-            and _is(matched[0], cond=None, action="update", set=None)
-            and _is(not_matched[0], cond=None, values=None)
-            and all(_is(c, action="delete") for c in nmbs)):
-        m = merge_into_manifest(
-            src_df, path, key_cols, stat_cols,
-            not_matched_by_source=(
-                nmbs[0].get("cond") or "true") if nmbs else None,
-            schema_evolution=evolve)
-        return _summary(spark, "MERGE", path, version=m.get("version"))
     m = merge_apply(
         src_df, path, key_cols, stat_cols,
         matched=matched, not_matched=not_matched,
@@ -1466,8 +1434,8 @@ def _merge_source(spark: SparkSession, p: _P) -> DataFrame:
 def _merge_keys(cond: str, t_alias: str | None,
                 s_alias: str | None) -> list[str]:
     """``a.k = b.k AND a.j = b.j`` → [k, j]: the equi-key contract of
-    ``merge_into_manifest`` (same column name both sides).  Anything
-    else is refused with the offending conjunct."""
+    ``merge_apply`` (same column name both sides).  Anything else is
+    refused with the offending conjunct."""
     aliases = {a for a in (t_alias, s_alias) if a}
     keys: list[str] = []
     for part in _split_top_kw(cond, "AND"):
@@ -1476,7 +1444,7 @@ def _merge_keys(cond: str, t_alias: str | None,
         t = q.peek()
         if t is None or t.up != "=":
             raise ValueError(f"non-equi MERGE condition: {part!r}; "
-                             "merge_into_manifest upserts by equi-key")
+                             "MERGE matches rows by equi-key")
         q.i += 1
         right = _qualified(q, aliases)
         if not q.done():
@@ -1484,8 +1452,8 @@ def _merge_keys(cond: str, t_alias: str | None,
         if left != right:
             raise ValueError(
                 f"MERGE keys must match by NAME on both sides "
-                f"(got {part!r}); merge_into_manifest upserts by "
-                "shared key columns")
+                f"(got {part!r}); MERGE matches rows by shared key "
+                "columns")
         keys.append(left)
     if not keys:
         raise ValueError("MERGE ON condition has no keys")

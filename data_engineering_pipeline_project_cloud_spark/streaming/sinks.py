@@ -148,9 +148,11 @@ def cdc_apply_writer(path: str, key_cols: list[str],
     (insert at v0, update at v1, delete at v2), so the writer first
     collapses to the latest change per key (max ``commit_version``),
     then applies the surviving post-images AND the deleted keys in ONE
-    atomic MERGE commit (``merge_into_manifest(..., delete_keys=…)``)
-    — readers see each batch's upserts and deletes together or not at
-    all, and the table history advances one version per batch.
+    atomic ``merge_apply`` commit (through the
+    ``merge_into_manifest(..., delete_keys=…)`` shorthand: upsert
+    clauses plus a DELETE clause for the marked delete keys) — readers
+    see each batch's upserts and deletes together or not at all, and
+    the table history advances one version per batch.
     Exactly-once: the combined commit is txn-gated per batch_id (a
     replayed batch no-ops inside the commit protocol).
     """
@@ -348,8 +350,8 @@ def merge_apply_writer(path: str, key_cols: list[str],
     carrying an op column — lands as ONE atomic commit mixing
     per-clause deletes, per-column updates, and conditional inserts.
     This is the standard streaming CDC-apply topology (Debezium/DMS
-    feed → merge), which ``manifest_merge_writer``'s fixed upsert
-    shape cannot express.  (``cdc_apply_writer`` above is the
+    feed → merge); ``manifest_merge_writer`` is the same engine with
+    its clauses fixed to an upsert.  (``cdc_apply_writer`` above is the
     CHANGEFEED applier — change_type post-image rows from
     manifest_changes; this one takes an arbitrary op-column log and
     a clause matrix.)

@@ -244,7 +244,7 @@ def test_serializable_conflict_append_vs_merge(spark, sf_dir, tmp_path):
 
     updates = spark.createDataFrame([(3, "PATCHED")],
                                     "n_nationkey long, n_name string")
-    bounds, keys = _key_pruning_info(updates, ["n_nationkey"])
+    bounds, keys, _ = _key_pruning_info(updates, ["n_nationkey"])
     conflict = _conflict_option(base["version"], "n_nationkey",
                                 bounds, keys)
     w, msgs = _staged_append(
@@ -280,7 +280,7 @@ def test_disjoint_concurrent_append_still_commits(spark, sf_dir, tmp_path):
 
     updates = spark.createDataFrame([(3, "PATCHED")],
                                     "n_nationkey long, n_name string")
-    bounds, keys = _key_pruning_info(updates, ["n_nationkey"])
+    bounds, keys, _ = _key_pruning_info(updates, ["n_nationkey"])
     conflict = _conflict_option(base["version"], "n_nationkey",
                                 bounds, keys)
     w, msgs = _staged_append(

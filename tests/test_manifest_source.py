@@ -596,9 +596,9 @@ def test_vacuum_retention(spark, sf_dir, tmp_path):
                 if p.endswith(".parquet")]) >= n_dead
     register(spark)
     df = spark.read.format("graft_manifest").option("path", path).load()
-    # 25 + 5 appended (key 0 duplicated), merge collapses both copies
-    # of key 0 into one upserted row
-    assert df.count() == 29
+    # 25 + 5 appended (key 0 duplicated); the merge updates both copies
+    # of key 0 (every matched target row, as in Delta)
+    assert df.count() == 30
     assert {r["n_name"] for r in df.filter("n_nationkey = 0").collect()} \
         == {"ZED"}
     with pytest.raises(Exception, match="not available"):

@@ -485,3 +485,92 @@ def test_merge_apply_casts_source_keys_to_table_types(spark, table):
     assert rows[3] == (777.0, "old")       # string '3' matched bigint 3
     assert rows[99] == (888.0, None)       # inserted, cast to bigint
     assert len(rows) == 21
+
+
+def test_sql_merge_nmbs_resolves_against_target(spark, table):
+    """NOT MATCHED BY SOURCE conditions and assignments see the TARGET
+    only: an unqualified column the source also carries is the
+    target's, not an ambiguous reference."""
+    spark.createDataFrame([(2, 5.0, "src")],
+                          "k long, val double, tag string"
+                          ).createOrReplaceTempView("nmbs_src")
+    graft_sql(spark, f"""
+        MERGE INTO `{table}` t USING nmbs_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED BY SOURCE AND val >= 150 THEN DELETE
+        WHEN NOT MATCHED BY SOURCE AND val < 30
+          THEN UPDATE SET tag = tag || '_stale'
+    """)
+    want = {k: (k * 10.0, "old") for k in range(15)}
+    want.update({0: (0.0, "old_stale"), 1: (10.0, "old_stale"),
+                 2: (5.0, "src")})
+    assert _rows(spark, table) == want
+
+
+def test_sql_merge_delete_only_accepts_duplicate_source_keys(spark, table):
+    """Delta's exemption: when the only MATCHED clause is an
+    unconditional DELETE, repeated source keys are fine (every match
+    deletes the same row).  A conditional delete or an update with
+    repeated matches still raises."""
+    spark.createDataFrame([(1,), (1,), (4,), (4,), (4,), (99,)],
+                          "k long").createOrReplaceTempView("dup_del")
+    v0 = load_manifest(table)["version"]
+    head = f"MERGE INTO `{table}` t USING dup_del s ON t.k = s.k "
+    graft_sql(spark, head + "WHEN MATCHED THEN DELETE")
+    assert sorted(_rows(spark, table)) == [
+        k for k in range(20) if k not in (1, 4)]
+    assert load_manifest(table)["version"] == v0 + 1
+    spark.createDataFrame([(2,), (2,)], "k long"
+                          ).createOrReplaceTempView("dup_del")
+    with pytest.raises(ValueError, match="multiple source rows"):
+        graft_sql(spark, head + "WHEN MATCHED AND s.k > 0 THEN DELETE")
+    with pytest.raises(ValueError, match="multiple source rows"):
+        graft_sql(spark, head + "WHEN MATCHED THEN UPDATE SET tag = 'x'")
+    assert load_manifest(table)["version"] == v0 + 1
+
+
+def test_keyed_rewrites_keep_bloom_filters(spark, tmp_path):
+    """Every keyed copy-on-write rewrite — the upsert and key-delete
+    shorthands and the streaming merge sink — writes the rewritten
+    files' bloom filters again; a delete key that is also upserted is
+    upserted."""
+    from data_engineering_pipeline_project_cloud_spark.sources.manifest_source import (
+        delete_from_manifest,
+        merge_into_manifest,
+    )
+    from data_engineering_pipeline_project_cloud_spark.streaming.sinks import (
+        manifest_merge_writer,
+    )
+
+    register(spark)
+    path = str(tmp_path / "bl")
+    (spark.range(0, 40).select(F.col("id").alias("k"),
+                               (F.col("id") * 10.0).alias("val"),
+                               F.lit("old").alias("tag"))
+     .repartitionByRange(4, "k").write.format("graft_manifest")
+     .mode("append").option("path", path).option("statCols", "k")
+     .option("bloomCols", "k").save())
+
+    def all_bloomed():
+        live = [f for f in load_manifest(path)["files"]
+                if not f.get("dead")]
+        return all("k" in (f.get("bloom") or {}) for f in live)
+
+    assert all_bloomed()
+    schema = "k long, val double, tag string"
+    merge_into_manifest(
+        spark.createDataFrame([(3, 1.0, "up"), (100, 2.0, "ins")], schema),
+        path, ["k"], ["k"],
+        delete_keys=spark.createDataFrame([(3,), (5,)], "k long"))
+    assert all_bloomed()
+    delete_from_manifest(spark.createDataFrame([(12,), (12,)], "k long"),
+                         path, ["k"], ["k"])
+    assert all_bloomed()
+    manifest_merge_writer(path, ["k"], ["k"], "bl")(
+        spark.createDataFrame([(20, 3.0, "sink")], schema), 0)
+    assert all_bloomed()
+    got = {r["k"]: (r["val"], r["tag"])
+           for r in read_manifest(spark, path).collect()}
+    assert got[3] == (1.0, "up") and got[100] == (2.0, "ins")
+    assert got[20] == (3.0, "sink")
+    assert 5 not in got and 12 not in got and len(got) == 39

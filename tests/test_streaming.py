@@ -340,6 +340,25 @@ def test_drain_partitions_scale_adaptive(spark):
     assert _drain_partitions(spark, 1 << 40) == sess       # 1 TB → clamped
 
 
+@pytest.mark.parametrize("conf_value", [None, "", "auto"])
+def test_drain_partitions_falls_back_to_default_parallelism(conf_value):
+    """An unset or non-numeric ``spark.sql.shuffle.partitions`` sizes
+    the drain from ``sparkContext.defaultParallelism`` instead of
+    raising."""
+    from types import SimpleNamespace
+
+    from data_engineering_pipeline_project_cloud_spark.plans.streamed import (
+        _drain_partitions,
+    )
+
+    fake = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: conf_value),
+        sparkContext=SimpleNamespace(defaultParallelism=6))
+    assert _drain_partitions(fake, None) == 6
+    assert _drain_partitions(fake, 1) == 1
+    assert _drain_partitions(fake, 1 << 40) == 6
+
+
 def test_stateful_drain_output_independent_of_partition_count(
         spark, sf_dir, events_stream, tmp_path):
     """State-partition count decides WHERE keys live, never what the
