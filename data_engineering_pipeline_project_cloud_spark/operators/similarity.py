@@ -164,10 +164,10 @@ def _bucket_from_signs(vec: Column, signs: list[list],
     """Bucket id from a precomputed sign table (``_plane_sign_table``):
     per plane, one literal-array ``zip_with`` dot + sign test — the
     same fold order and arithmetic as the per-row forms, minus the
-    per-row hashing.  Precondition: every non-null vector has width
-    ``len(signs[p])`` (the registry embedding tables do; ragged rows
-    would zip against NULL components where the per-row form used the
-    row's own width)."""
+    per-row hashing.  The table fits one width, ``len(signs[p])``; a
+    non-null row of another width (a ragged table) would zip against
+    NULL components, so such rows take the per-row form, which uses
+    the row's own width.  NULL vectors land in bucket 0 either way."""
     v = _quantized(vec) if portable else vec
     acc = F.lit(0)
     for p, sv in enumerate(signs):
@@ -182,14 +182,19 @@ def _bucket_from_signs(vec: Column, signs: list[list],
                 F.lit(0.0), lambda a, c: a + c)
         bit = F.when(total >= 0, F.lit(1)).otherwise(F.lit(0))
         acc = acc + bit * F.lit(1 << p)
-    return acc.cast("long")
+    if not signs:
+        return acc.cast("long")
+    per_row = (lsh_bucket_portable if portable else lsh_bucket)(vec, len(signs))
+    return (F.when(F.size(vec) == len(signs[0]), acc.cast("long"))
+            .otherwise(per_row))
 
 
 def _bucketed_frame(emb: DataFrame, num_planes: int, id_col: str,
                     vec_col: str, portable: bool) -> DataFrame:
     """(id, vec, bucket) with the hoisted-sign bucket computation; one
     bounded dim-probe job (like ``kmeans_centroids``'s), falling back
-    to the per-row form only for an empty input (no dim to probe)."""
+    to the per-row form for an empty input (no dim to probe) and, row
+    by row, for vectors whose width is not the probed one."""
     probe = (emb.filter(F.col(vec_col).isNotNull())
              .select(F.size(F.col(vec_col)).alias("d")).first())
     if probe is None:
@@ -512,6 +517,55 @@ def ivf_assignments(emb: DataFrame, n_cells: int = 16,
     return _assign_cells(embn, cents, id_col, vec_col, assume_unit=True)
 
 
+def _round6(x: float | None) -> float | None:
+    """``F.round(x, 6)`` on the driver.  Spark rounds the shortest
+    decimal form of a double half-up (``BigDecimal.valueOf``); Python's
+    ``round`` rounds its binary value half-even, so the two differ on
+    ties such as 0.0000125."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if x is None or x != x or x in (float("inf"), float("-inf")):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _seq_dot(a: list | None, b: list | None) -> float | None:
+    """``_dot`` on the driver: the same left-to-right double sum, and
+    NULL (None) where ``zip_with`` would pad or meet a NULL element."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        if x is None or y is None:
+            return None
+        acc += float(x) * float(y)
+    return acc
+
+
+def _probe_cells(qvecs: dict[int, list], cents: DataFrame,
+                 nprobe: int) -> list[tuple[int, int]]:
+    """Each query's ``nprobe`` closest coarse cells, ranked on the
+    driver: ``(query_id, cell_id)`` pairs in query and rank order.
+    The codebook is collected (n_cells × dim doubles — bounded at any
+    corpus size) and scored against the collected query vectors with
+    the ordering a Spark window over ``round(_dot(qv, centroid), 6)``
+    gives: similarity descending (NaN first, NULL last), then lowest
+    ``cell_id``."""
+    crows = [(int(r["cell_id"]), r["centroid"]) for r in cents.collect()]
+
+    def order(qv, cid, cent):
+        sim = _round6(_seq_dot(qv, cent))
+        if sim is None:
+            return (2, 0.0, cid)
+        return (0, 0.0, cid) if sim != sim else (1, -sim, cid)
+
+    pairs = []
+    for qid in sorted(qvecs):
+        ranked = sorted(order(qvecs[qid], cid, cent) for cid, cent in crows)
+        pairs += [(int(qid), cid) for *_, cid in ranked[:nprobe]]
+    return pairs
+
+
 def ivf_ann_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
                  n_cells: int = 16, nprobe: int = 2,
                  id_col: str = "vec_id",
@@ -533,15 +587,22 @@ def ivf_ann_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     file itself: the (id, unit vector, cell_id) table an offline IVF
     index job writes ``partitionBy(cell_id)`` — the same at-rest
     treatment the IVF-PQ face got in r7.  With it the per-query cost
-    is probe + pruned rank only: no corpus normalize, no corpus ×
-    codebook assignment, and the probed-cell set is applied as a
-    STATIC isin filter (from a bounded |Q|·nprobe collect of the
-    probe ranking), so a partitioned code table is partition-pruned
-    before a single vector is read.  Requires ``centroids``.  With
-    ``assigned`` construction is EAGER (the probe collect is a driver
-    job fired while the DataFrame is built), and query ids that
-    resolve to no probe — absent from the corpus — raise
-    ``ValueError`` rather than silently returning an empty top-k."""
+    is probe + pruned rank only: no corpus normalize and no corpus ×
+    codebook assignment.  Requires ``centroids``.
+
+    Construction is EAGER: the normalized query vectors and the
+    codebook are collected while the DataFrame is built (two bounded
+    driver jobs), and the probes are ranked on the driver
+    (``_probe_cells``, shared with ``pq_ann_topk``) — no window
+    shuffle and no broadcast of a probe table.  The probed cells
+    become a STATIC isin filter, so a partitioned index is
+    partition-pruned before a single vector is read, and the probed
+    query vectors ride into the candidate scan as one literal array
+    of (query_id, cell_id, qv) structs, matched per row on
+    ``cell_id``.  The query then runs as one scan plus the ranking
+    window.  Query ids that are absent or NULL-embedded are skipped;
+    if none is left, ``ValueError`` is raised rather than an empty
+    top-k returned."""
     from pyspark.sql import Window
 
     if assigned is None:
@@ -567,48 +628,31 @@ def ivf_ann_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         # lookup.  Same per-row normalization the index rows carry.
         qsrc = with_unit_vectors(emb, id_col, vec_col)
 
-    cents = F.broadcast(cents)
-    q = (qsrc.filter(F.col(id_col).isin(query_ids))
-         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("probe_sim").desc(), F.col("cell_id").asc())
-    probes = (
-        q.join(cents)
-        .select("query_id", "qv", "cell_id",
-                F.round(_dot(F.col("qv"), F.col("centroid")), 6)
-                .alias("probe_sim"))
-        .withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cell_id")
-    )
-
-    cand = cand_src.select(F.col(id_col).alias("candidate_id"),
-                           F.col(vec_col).alias("cv"), "cell_id")
-    if assigned is not None:
-        # bounded collect (|Q| × nprobe rows — the same shape as the
-        # PQ probe): rebuild the probe table as literal data so the
-        # cell filter below is STATIC and prunes the at-rest
-        # partitioned index, and the candidate join needs no window
-        # lineage on its broadcast side
-        probe_rows = [(int(r["query_id"]), [float(x) for x in r["qv"]],
-                       int(r["cell_id"])) for r in probes.collect()]
-        if not probe_rows:
-            raise ValueError(
-                f"no query id of {sorted(query_ids)} resolved in "
-                f"{id_col}: empty probe set")
-        probes = F.broadcast(emb.sparkSession.createDataFrame(
-            probe_rows,
-            schema="query_id long, qv array<double>, cell_id long"))
-        cand = cand.withColumn("cell_id", F.col("cell_id").cast("long"))
-        cand = cand.filter(F.col("cell_id").isin(
-            sorted({c for _, _, c in probe_rows})))
-    else:
-        probes = F.broadcast(probes)
+    qvecs = {int(r[0]): [float(x) for x in r[1]]
+             for r in qsrc.filter(F.col(id_col).isin(query_ids)
+                                  & F.col(vec_col).isNotNull())
+             .select(id_col, vec_col).collect()}
+    if not qvecs:
+        raise ValueError(
+            f"no query id of {sorted(query_ids)} resolved in "
+            f"{id_col}: empty probe set")
+    pairs = _probe_cells(qvecs, cents, nprobe)
+    probes = F.array(*[
+        F.struct(F.lit(qid).cast("long").alias("query_id"),
+                 F.lit(cid).cast("long").alias("cell_id"),
+                 F.array(*[F.lit(x) for x in qvecs[qid]]).alias("qv"))
+        for qid, cid in pairs])
+    cell = F.col("cell_id").cast("long")
     sims = (
-        probes.join(cand, "cell_id")
-        .filter(F.col("query_id") != F.col("candidate_id"))
-        .select("query_id", "candidate_id",
-                F.round(_dot(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"))
+        cand_src.filter(cell.isin(sorted({c for _, c in pairs})))
+        .select(F.col(id_col).alias("candidate_id"),
+                F.col(vec_col).alias("cv"),
+                F.explode(F.filter(probes, lambda p: p["cell_id"] == cell))
+                .alias("p"))
+        .filter(F.col("p.query_id") != F.col("candidate_id"))
+        .select(F.col("p.query_id").alias("query_id"), "candidate_id",
+                F.round(_dot(F.col("p.qv"), F.col("cv")), 6)
+                .alias("cosine_sim"))
         # no dedup needed: each candidate lives in exactly one cell
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -908,8 +952,9 @@ def pq_ann_topk(emb: DataFrame, query_ids: list[int],
     written ``partitionBy(cell_id)`` and this probe IS partition
     pruning, cutting the scan to nprobe/n_cells of the index.  Probe
     selection is |Q|·n_cells driver-side dots on the collected
-    (bounded, tiny) coarse codebook — the same bounded-artifact shape
-    as the ADC tables themselves.
+    (bounded, tiny) coarse codebook (``_probe_cells``, shared with
+    ``ivf_ann_topk``) — the same bounded-artifact shape as the ADC
+    tables themselves.
 
     Construction is EAGER (unlike most operators here): the query
     vectors are collected while the DataFrame is being built — one
@@ -958,23 +1003,13 @@ def pq_ann_topk(emb: DataFrame, query_ids: list[int],
         total = term if total is None else total + term
     indexed = "cell_id" in codes.columns
     if centroids is not None and (cells is not None or indexed):
-        # IVF-PQ: each query ADC-scans only its nprobe closest cells.
-        # Coarse probe ranking runs driver-side over the collected
-        # codebook (n_cells × dim doubles — bounded at any corpus
-        # size), ties broken by lowest cell_id for determinism.  The
+        # IVF-PQ: each query ADC-scans only its nprobe closest cells,
+        # ranked driver-side as ``ivf_ann_topk`` ranks them.  The
         # probed-cell set is applied as a STATIC isin filter, so a
         # code table written partitionBy(cell_id) — the at-rest index
         # — is partition-pruned to nprobe/n_cells of its files before
         # a single code is read.
-        crows = [(int(r["cell_id"]), list(r["centroid"]))
-                 for r in centroids.collect()]
-        probe_pairs = []
-        for qid in sorted(qrows):
-            qv = qrows[qid]
-            ranked = sorted(
-                ((-sum(a * c for a, c in zip(qv, cent)), cid)
-                 for cid, cent in crows))[:nprobe]
-            probe_pairs += [(int(qid), cid) for _, cid in ranked]
+        probe_pairs = _probe_cells(qrows, centroids, nprobe)
         probe_df = F.broadcast(emb.sparkSession.createDataFrame(
             probe_pairs, schema="query_id long, cell_id long"))
         coded = codes if indexed else codes.join(

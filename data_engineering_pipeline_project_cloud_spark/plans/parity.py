@@ -334,7 +334,14 @@ def write_master(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     uniqueness, so the serving write first resolves the grain
     deterministically (keep-one per key with a pinned ordering), then
     enforces it with ``assert_unique_key`` — the Spark analog of the
-    constraint."""
+    constraint.
+
+    Layout (the stand-in for the reference's seven serving indexes,
+    ``transform-complex-full.py:215-221``): one directory per
+    ``order_purchase_month`` holding ONE parquet file (more only when
+    AQE splits a skewed month), its rows sorted by
+    (``product_category``, ``seller_id``).  A month filter reads one
+    file; an ``order_id`` lookup opens one small file per month."""
     from ..operators import top1_per_group
     from ..sources import assert_unique_key, write_overwrite
 
@@ -361,11 +368,13 @@ def serve(spark: SparkSession, out_dir: str,
     Connect client — has named tables to query.  Month-partition
     pruning and column pruning flow through the views to the parquet
     scan, so a dashboard filter on ``order_purchase_month`` reads one
-    partition, not the mart.
+    partition — one file, in ``write_master``'s layout — not the mart,
+    and a point lookup opens one small file per month.
 
     Views registered (returned as a list):
 
-    * ``{prefix}_master`` — the partitioned/sorted master parquet.
+    * ``{prefix}_master`` — the month-partitioned master parquet,
+      one file per month sorted by (category, seller).
     * ``{prefix}_monthly_category_kpis`` — month × category: exact
       DECIMAL-aggregated net revenue, item count, late-shipment count.
     * ``{prefix}_seller_kpis`` — per seller nation: revenue, items,

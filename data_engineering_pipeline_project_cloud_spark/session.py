@@ -16,6 +16,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap used when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half the host's physical memory, at least 1g and at most 24g.  In
+    local mode the driver JVM is the whole engine, and the other half
+    is left to Python workers, off-heap buffers and the page cache; a
+    fixed 24g would let the heap outgrow a small machine's RAM."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf: keep 24g
+        return "24g"
+    mb = phys // 2 // (1024 * 1024)
+    return f"{min(max(mb, 1024), 24 * 1024)}m"
+
+
 def get_spark(app_name: str = "data_engineering_pipeline_project_cloud_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -49,7 +63,8 @@ def get_spark(app_name: str = "data_engineering_pipeline_project_cloud_spark",
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                                      default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

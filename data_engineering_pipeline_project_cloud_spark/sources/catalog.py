@@ -165,8 +165,7 @@ def write_jdbc(df: DataFrame, url: str, table: str,
 
 
 def write_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None,
-                    sort_within_by: list[str] | None = None,
-                    coalesce_files: int | None = None) -> None:
+                    sort_within_by: list[str] | None = None) -> None:
     """Idempotent full-overwrite sink (S3/S5; ``scripts/main.py:55-62``,
     ``scripts/transform-complex-full.py:17``).
 
@@ -176,19 +175,21 @@ def write_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = N
     skipping.  ``sort_within_by`` clusters rows inside files so
     row-group stats are selective (S6 analog).
 
-    ``coalesce_files`` bounds output file count — the small-files
-    problem: a 32-reducer job writing into 200 hive partitions emits
-    up to 6400 files; downstream listing + open costs then dominate
-    scans.  Repartitioning ON the partition columns puts each hive
-    partition's rows into few tasks (one file per partition per
-    task).  AQE coalescing helps shuffle sizes, not file fanout.
+    A partitioned write rebalances on the partition columns first
+    (``REBALANCE`` hint): each partition value's rows meet in one
+    task, so the write emits one file per partition value — AQE still
+    splits a skewed value at the advisory partition size — instead of
+    one per (task, value), the small-files fanout that makes a point
+    lookup open every task's file of every partition.  The files are
+    then sorted by ``partition_by + sort_within_by``: that ordering
+    already satisfies the sort the planned write needs, so the
+    ``sort_within_by`` keys survive inside each file (a sort on the
+    partition columns alone would replace them).
     """
-    if coalesce_files:
-        if partition_by:
-            df = df.repartition(coalesce_files, *[F.col(c) for c in partition_by])
-        else:
-            df = df.repartition(coalesce_files)
-    if sort_within_by:
+    if partition_by:
+        df = (df.hint("rebalance", *partition_by)
+              .sortWithinPartitions(*partition_by, *(sort_within_by or [])))
+    elif sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
     writer = df.write.mode("overwrite")
     if partition_by:

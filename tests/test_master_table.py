@@ -149,3 +149,55 @@ def test_serve_registers_views_over_written_mart(spark, sf_dir, tmp_path):
                       "WHERE order_purchase_month = '1995-03'")
             ._jdf.queryExecution().executedPlan().toString())
     assert "order_purchase_month" in plan
+
+
+def _sorted_by(path: str, cols: list[str]) -> bool:
+    """Rows of one parquet file in ascending ``cols`` order, NULLs
+    first (Spark's ascending default)."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(path, columns=cols).to_pylist()
+    keys = [tuple(x for c in cols for x in (r[c] is not None, r[c]))
+            for r in rows]
+    return keys == sorted(keys)
+
+
+def test_write_master_one_sorted_file_per_month(spark, sf_dir, tmp_path):
+    """The serving layout: every month directory holds exactly one
+    parquet file, clustered by (product_category, seller_id) inside —
+    a point lookup opens one file per month, and the row-group stats
+    of the sort keys are selective."""
+    import glob
+
+    out = str(tmp_path / "master")
+    write_master(spark, sf_dir, out)
+    months = glob.glob(f"{out}/order_purchase_month=*")
+    assert months
+    for month in months:
+        files = glob.glob(f"{month}/*.parquet")
+        assert len(files) == 1, (month, files)
+        assert _sorted_by(files[0], ["product_category", "seller_id"]), month
+
+
+def test_write_overwrite_partitioned_keeps_sort(spark, tmp_path):
+    """A partitioned write with ``sort_within_by`` keeps that order
+    inside each file and writes one file per partition value, however
+    many tasks feed it."""
+    import glob
+    import random
+
+    from data_engineering_pipeline_project_cloud_spark.sources import (
+        write_overwrite,
+    )
+
+    rng = random.Random(7)
+    rows = [(i % 3, rng.randrange(50), rng.randrange(1000)) for i in range(600)]
+    df = spark.createDataFrame(rows, "p int, s int, v int").repartition(4)
+    out = str(tmp_path / "t")
+    write_overwrite(df, out, partition_by=["p"], sort_within_by=["s", "v"])
+    for p in range(3):
+        files = glob.glob(f"{out}/p={p}/*.parquet")
+        assert len(files) == 1, files
+        assert _sorted_by(files[0], ["s", "v"]), p
+    assert sorted(tuple(r) for r in spark.read.parquet(out)
+                  .select("p", "s", "v").collect()) == sorted(rows)

@@ -5,6 +5,7 @@ values, and recall against brute force is bounded below.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_pipeline_project_cloud_spark.plans.llmdata import (
@@ -321,3 +322,135 @@ def test_gram_matrix_exactness_tiny(spark):
     for i in range(3):
         for j in range(i, 3):
             assert got[(i, j)] == G[i, j], (i, j)
+
+
+@pytest.fixture(scope="module")
+def ivf_at_rest(spark, sf_dir, tmp_path_factory):
+    """(raw vectors, parquet codebook, cell-partitioned index): the
+    at-rest IVF inputs a serving client reads from files."""
+    from data_engineering_pipeline_project_cloud_spark.plans.llmdata import (
+        prefit_ivf_codebook,
+        prefit_ivf_index,
+    )
+    from data_engineering_pipeline_project_cloud_spark.sources import load_table
+
+    path = str(tmp_path_factory.mktemp("ivf") / "centroids")
+    prefit_ivf_codebook(spark, sf_dir).write.parquet(path)
+    return (load_table(spark, sf_dir, "embeddings"),
+            spark.read.parquet(path),
+            spark.read.parquet(prefit_ivf_index(spark, sf_dir)))
+
+
+def _ivf_bruteforce(emb, cents, assigned, qids, k, nprobe):
+    """The IVF answer spelled out in Spark: each query's probe cells
+    ranked by a window over round(dot, 6) DESC, cell_id ASC, then
+    every vector of those cells ranked by round(dot, 6) DESC,
+    candidate_id ASC."""
+    from pyspark.sql import Window
+
+    from data_engineering_pipeline_project_cloud_spark.operators.similarity import (
+        _dot,
+        with_unit_vectors,
+    )
+
+    q = (with_unit_vectors(emb).filter(F.col("vec_id").isin(qids))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv")))
+    probes = (q.crossJoin(cents)
+              .withColumn("s", F.round(_dot(F.col("qv"), F.col("centroid")), 6))
+              .withColumn("n", F.row_number().over(
+                  Window.partitionBy("query_id")
+                  .orderBy(F.col("s").desc(), F.col("cell_id").asc())))
+              .filter(F.col("n") <= nprobe)
+              .select("query_id", "qv", "cell_id"))
+    cand = assigned.select(F.col("vec_id").alias("candidate_id"),
+                           F.col("embedding").alias("cv"), "cell_id")
+    sims = (probes.join(cand, "cell_id")
+            .filter(F.col("query_id") != F.col("candidate_id"))
+            .select("query_id", "candidate_id",
+                    F.round(_dot(F.col("qv"), F.col("cv")), 6)
+                    .alias("cosine_sim")))
+    ranked = sims.withColumn("rank", F.row_number().over(
+        Window.partitionBy("query_id")
+        .orderBy(F.col("cosine_sim").desc(), F.col("candidate_id").asc())))
+    return sorted(tuple(r) for r in ranked.filter(F.col("rank") <= k).collect())
+
+
+def test_ivf_single_query_runs_at_most_four_jobs(spark, ivf_at_rest):
+    """One kNN query over the at-rest index: the query-vector and
+    codebook collects plus the candidate scan and its ranking — the
+    probes are ranked on the driver, not by a window job and a
+    broadcast probe table."""
+    from data_engineering_pipeline_project_cloud_spark.operators.similarity import (
+        ivf_ann_topk,
+    )
+
+    emb, cents, assigned = ivf_at_rest
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-one-query", "ivf-one-query")
+    try:
+        rows = ivf_ann_topk(emb, [3], k=TOPK, n_cells=16, nprobe=2,
+                            centroids=cents, assigned=assigned).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf-one-query")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == TOPK
+    assert len(jobs) <= 4, sorted(jobs)
+
+
+@pytest.mark.parametrize("qids", [[3], [0, 4, 7, 9]])
+def test_ivf_matches_bruteforce_over_probed_cells(spark, ivf_at_rest, qids):
+    from data_engineering_pipeline_project_cloud_spark.operators.similarity import (
+        ivf_ann_topk,
+    )
+
+    emb, cents, assigned = ivf_at_rest
+    got = sorted(tuple(r) for r in ivf_ann_topk(
+        emb, qids, k=TOPK, n_cells=16, nprobe=2, centroids=cents,
+        assigned=assigned).collect())
+    assert got == _ivf_bruteforce(emb, cents, assigned, qids, TOPK, 2)
+    assert {r[0] for r in got} == set(qids)
+
+
+def test_probe_rounding_is_half_up_like_spark(spark):
+    """The driver-side probe ranking rounds as ``F.round`` does."""
+    from data_engineering_pipeline_project_cloud_spark.operators.similarity import (
+        _round6,
+    )
+
+    xs = [0.0000125, 2.5e-6, -2.5e-6, 0.1234565, -0.1234565, 1 / 3, 0.0]
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    want = [r[0] for r in df.select(F.round("x", 6)).collect()]
+    assert [_round6(x) for x in xs] == want
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_bucketed_frame_ragged_vectors_use_row_width(spark, portable):
+    """A row whose width differs from the probed one gets the bucket
+    the per-row form gives it, not one zipped against NULLs; NULL
+    vectors keep bucket 0."""
+    import random
+
+    from data_engineering_pipeline_project_cloud_spark.operators.similarity import (
+        _bucketed_frame,
+        lsh_bucket,
+        lsh_bucket_portable,
+    )
+
+    rng = random.Random(11)
+    rows = [(0, [rng.uniform(-1, 1) for _ in range(8)])]
+    rows += [(i, [rng.uniform(-1, 1) for _ in range(rng.choice([5, 8, 12]))])
+             for i in range(1, 40)]
+    rows.append((40, None))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>") \
+        .coalesce(1)
+    per_row = (lsh_bucket_portable if portable else lsh_bucket)(
+        F.col("embedding"), 6)
+    got = {r[0]: r[1] for r in _bucketed_frame(emb, 6, "vec_id", "embedding",
+                                               portable)
+           .select("vec_id", "bucket").collect()}
+    want = {r[0]: r[1] for r in emb.select("vec_id", per_row).collect()}
+    assert got == want
+    assert got[40] == 0
+    assert len({v for k, v in got.items() if len(rows[k][1] or []) != 8}) > 1
